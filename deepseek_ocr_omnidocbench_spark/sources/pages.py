@@ -24,6 +24,9 @@ import pyarrow.parquet as pq
 from ..operators.html_extract import extract_markdown
 from ..operators.pdf_extract import extract_pdf_markdown
 
+# the checkout holding this package (three levels up from this file)
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 _WORDS = (
     "data spark engine query table column partition shuffle join filter "
     "document page extraction markdown heading paragraph table formula "
@@ -332,8 +335,11 @@ def n_pages_for_sf(sf: float) -> int:
     return max(40, int(sf * 20000))
 
 
-def pages_path_for_sf(sf: float, base_dir: str = "/root/repo/.data/pages") -> str:
-    """Parquet path for a scale factor; generated on first use (seeded)."""
+def pages_path_for_sf(sf: float, base_dir: str | None = None) -> str:
+    """Parquet path for a scale factor; generated on first use (seeded).
+    ``base_dir`` defaults to ``.data/pages`` in the checkout."""
+    if base_dir is None:
+        base_dir = os.path.join(_CHECKOUT, ".data", "pages")
     path = os.path.join(base_dir, "sf%s" % sf, "pages.parquet")
     if not os.path.exists(path):
         write_pages(path, n_pages_for_sf(sf))

@@ -12,9 +12,11 @@ import time
 
 import pytest
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 RUNNER = r"""
 import sys, time, os
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, __REPO_ROOT__)
 from deepseek_ocr_omnidocbench_spark.session import get_spark
 from deepseek_ocr_omnidocbench_spark.sources.lineage import StageCheckpoint
 from deepseek_ocr_omnidocbench_spark.sources.pages import (
@@ -43,7 +45,7 @@ print("DONE", out.count(), flush=True)
 def test_sigkill_then_resume(tmp_path):
     root = str(tmp_path / "ck")
     runner = tmp_path / "runner.py"
-    runner.write_text(RUNNER)
+    runner.write_text(RUNNER.replace("__REPO_ROOT__", repr(ROOT)))
 
     # first attempt: kill while buckets are still being committed
     p = subprocess.Popen([sys.executable, str(runner), root, "1.0"],
