@@ -13,6 +13,17 @@ skips that re-read while an archive's mtime and size are unchanged; a
 changed or missing archive is still re-read as before.  The executors get
 the package's parent directory on PYTHONPATH so that the daemon imports
 from any working directory.
+
+Spark keeps compiled generated code in one LRU cache per JVM, 100 entries
+by default.  One ``evaluate()`` generates about 120 distinct sources and
+``run_curation_inline`` about 110, so at 100 every warm evaluate evicted
+and re-compiled 86-90 of them through Janino, and the JIT then worked on
+~170 freshly loaded classes.  ``spark.sql.codegen.cache.maxEntries`` is
+raised to 1000, which covers a session running extraction, evaluation and
+curation (about 245 sources together) four times over.  It is a static
+SQL conf, and the cache is JVM-wide and sized once, at the first codegen
+in the JVM: if a session built elsewhere ran any query first, that
+session's size holds and this setting has no effect.
 """
 
 from __future__ import annotations
@@ -40,8 +51,9 @@ def get_spark(
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 8
     if shuffle_partitions is None:
-        # one shuffle partition per core locally; on a cluster this should be
-        # 2-3x total cores — callers pass it explicitly at scale.
+        # one shuffle partition per core locally, but never fewer than 8;
+        # on a cluster this should be 2-3x total cores — callers pass it
+        # explicitly at scale.
         shuffle_partitions = max(int(cores), 8)
 
     builder = (
@@ -61,6 +73,9 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.python.daemon.module", "deepseek_ocr_omnidocbench_spark._daemon")
+        # sized to the session's working set of generated classes (see the
+        # module docstring); the default of 100 re-compiles on warm jobs
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     extra_conf = dict(extra_conf or {})
     pythonpath = extra_conf.pop("spark.executorEnv.PYTHONPATH", None)
